@@ -74,7 +74,6 @@ def scrape(
     wait_selector: str | None = None,
     sleep_time: float = 2.0,
     scrape_max_parallel: int = 1,
-    **extra,
 ) -> ScrapeResult:
     """Run a crawl and materialize its per-page results.
 
@@ -126,7 +125,6 @@ def scrape(
         extract_fields=tuple(extract_fields),
         extraction_prompt=extraction_prompt,
         fetch_options=fetch_options,
-        extra=extra,
     )
     engine = CrawlEngine(spark, cfg, warehouse)
     state = engine.run()
@@ -174,7 +172,6 @@ def queue_retry(engine: CrawlEngine, run: str) -> int:
         snap = engine.frontier.commit_upsert(changed)
         engine.state["snapshots"]["frontier"] = snap
         engine.state["done"] = False
-        engine._frontier_df = None
         engine._commit_state()
     return n
 
@@ -185,7 +182,6 @@ def queue_reset(engine: CrawlEngine, run: str) -> int:
     n = frontier.filter(frontier.run == run).count()
     snap = engine.frontier.commit_overwrite(stats.delete_run(frontier, run))
     engine.state["snapshots"]["frontier"] = snap
-    engine._frontier_df = None
     engine._commit_state()
     return n
 

@@ -194,7 +194,6 @@ class CrawlConfig:
     # this take a shuffle join instead of a forced broadcast (OOM guard)
     log_selection: bool = True  # record per-superstep selection order in
     # RUN_STATE.json (the equivalence-test artifact; off for big benches)
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         # run-name sanitization (reference runner.py:193-196): the name is

@@ -1,14 +1,15 @@
-"""URL column expressions (JVM fast path) and the canonicalization UDF.
+"""URL column expressions (JVM fast path) and the policy UDFs.
 
 Two tiers, per SURVEY §2.2:
 
 - JVM Column expressions for everything ``pyspark.sql.functions`` can say
-  (validity F1, extension filter F2, segment filter F3, host extraction,
-  truncation F15, hashing) — these stay inside whole-stage codegen.
-- one vectorized pandas UDF, ``canonicalize_udf``, for the part Spark has
-  no built-in for (full canonicalization incl. default-port stripping,
-  reference queue_db.py:319) — it calls the exact policy.canonicalize_url
-  used by the simulator, so seen-set identity is bit-deterministic.
+  (extension filter F2, segment filter F3, host extraction, hashing) —
+  these stay inside whole-stage codegen.
+- vectorized pandas UDFs for the parts that must be exactly the policy
+  functions the simulator runs: ``canonicalize_udf`` (full
+  canonicalization incl. default-port stripping, reference
+  queue_db.py:319 — so seen-set identity is bit-deterministic) and
+  ``valid_url_udf`` (F1 validity incl. the path-safe host check).
 
 ``url_hash`` is always computed JVM-side with ``F.xxhash64`` *after*
 canonicalization, so the hash definition lives in one place (Spark's
@@ -27,13 +28,6 @@ from par_scrape_spark import policy
 # ------------------------------------------------------------- JVM tier
 
 
-def valid_url_col(url: Column) -> Column:
-    """F1: scheme in (http, https) and non-empty host (links.py:37-52)."""
-    return F.parse_url(url, F.lit("PROTOCOL")).isin("http", "https") & F.parse_url(
-        url, F.lit("HOST")
-    ).isNotNull()
-
-
 def host_col(url: Column) -> Column:
     """C3: URL host via the built-in parser."""
     return F.parse_url(url, F.lit("HOST"))
@@ -45,11 +39,6 @@ def exclude_url_col(url: Column) -> Column:
     return path.rlike(policy.EXCLUDED_EXTENSION_RLIKE) | path.rlike(
         policy.EXCLUDED_SEGMENT_RLIKE
     )
-
-
-def truncate_error_col(msg: Column, max_len: int = 255) -> Column:
-    """F15: bounded error payload (queue_db.py:28,617)."""
-    return F.substring(msg, 1, max_len)
 
 
 def url_hash_col(url: Column) -> Column:

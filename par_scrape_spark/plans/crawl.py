@@ -160,11 +160,6 @@ class CrawlEngine:
         # domain_rate_limit), so ticks must be monotone across runs too
         self.clock_path = os.path.join(warehouse, "CLOCK.json")
         self.timings: list[dict] = []  # per-superstep phase wall times
-        # in-memory chained table states: the functional image of what is
-        # on disk (disk stays the checkpoint / source of truth on resume;
-        # chaining avoids re-listing + re-resolving parquet every step)
-        self._frontier_df = None
-        self._politeness_df = None
         self.state: dict = {
             "run": config.run_name,
             "superstep": 0,
@@ -260,6 +255,7 @@ class CrawlEngine:
         self.filters.advance(
             None, 0, frontier_rows.select("host_salt", "url_hash"), cfg.num_buckets
         )
+        frontier_rows.unpersist()
         # Pin EVERY table the run will commit to — commits chain from the
         # pinned parent, never LATEST, so a crash-redo of a superstep can
         # never resurrect orphan appends from the interrupted attempt
@@ -319,12 +315,11 @@ class CrawlEngine:
         phase_t: dict[str, float] = {}
         t0 = time.time()
 
-        if self._frontier_df is None:
-            self._frontier_df = self._read_table(self.frontier, "frontier").cache()
-        if self._politeness_df is None:
-            self._politeness_df = self._read_table(self.politeness, "politeness").cache()
-        frontier = self._frontier_df
-        politeness = self._politeness_df
+        # the pinned snapshots are the only table image: read (merge-on-read
+        # latest-wins, tableio/manifest.py) and cache them for this
+        # superstep's branches; released with the other per-step caches
+        frontier = self._read_table(self.frontier, "frontier").cache()
+        politeness = self._read_table(self.politeness, "politeness").cache()
 
         selected, n_known = scheduler.select_batch_with_count(
             frontier,
@@ -351,7 +346,8 @@ class CrawlEngine:
         if n_selected == 0:
             self.state["done"] = True
             self._commit_state()
-            selected.unpersist()
+            for df in (selected, frontier, politeness):
+                df.unpersist()
             return 0
 
         seed_set = frozenset(
@@ -636,7 +632,6 @@ class CrawlEngine:
         pol_changed = pol_full.filter(
             F.col("_sel").isNotNull() | F.col("_err").isNotNull()
         ).drop("_sel", "_err")
-        pol_new = pol_full.drop("_sel", "_err")
 
         # payload: image rows for fetch-ok pages (the raw artifact exists
         # even when extraction later fails — reference saves raw before the
@@ -709,10 +704,12 @@ class CrawlEngine:
         # LATEST: a crash between side-table commits and _commit_state
         # leaves orphan commits, and a LATEST-chained redo would resurrect
         # them (duplicated payload rows, doubled lineage counters).
-        # ALL commits — frontier included — plus the frontier/politeness
-        # chain checkpoints run as ONE pool of concurrent Spark jobs:
-        # every serial job barrier between them was pure driver latency
-        # (the superstep's fixed cost, which is what dilutes scaling).
+        # ALL commits — frontier included — run as ONE pool of concurrent
+        # Spark jobs: every serial job barrier between them was pure
+        # driver latency (the superstep's fixed cost, which is what
+        # dilutes scaling). The engine keeps no in-memory table image
+        # across supersteps: the next superstep reads the snapshots
+        # pinned below, so the commits are the only state hand-off.
         # Shared cached subtrees are safe under concurrency — the block
         # manager's per-partition loading locks make the first arriving
         # task compute a cached partition while the rest block and reuse
@@ -720,10 +717,7 @@ class CrawlEngine:
         t1 = time.time()
         pins = self.state["snapshots"]
         upsert = upsert.cache()
-        pol_new = pol_new.cache()
         prev_fstep = self.state.get("filter_step")
-        chain = os.environ.get("SPARK_GRAFT_CHAIN", "1") == "1"
-        new_frontier = new_politeness = None
         rebuild_filters = False
         compacted = False
         from concurrent.futures import ThreadPoolExecutor
@@ -778,49 +772,6 @@ class CrawlEngine:
                 new_rows.select("host_salt", "url_hash"),
                 cfg.num_buckets,
             )
-            # compaction folds the delta chain and invalidates the
-            # chained images — predict it BEFORE submitting the chain
-            # checkpoints so a compacting superstep doesn't compute two
-            # frontier-sized eager checkpoints only to discard them
-            # (ADVICE r2: one leaked checkpoint copy per compaction).
-            # The prediction (current deltas + this commit) matches the
-            # authoritative post-commit check below except under an
-            # unexpected concurrent commit, which the discard branch
-            # still handles by awaiting + unpersisting.
-            will_compact = (
-                self.frontier.delta_count() + 1 >= cfg.compact_every
-            )
-            fut_chain_f = fut_chain_p = None
-            if chain and not will_compact:
-                # localCheckpoint truncates the plan (no lineage growth
-                # across supersteps) and materializes eagerly, so the
-                # parents can be unpersisted safely; on failure the disk
-                # snapshot is the recovery path (resume()). Upsert row
-                # count is bounded by batch + resets + new discoveries —
-                # the broadcast guard uses that bound.
-                survivors_f = frontier.join(
-                    _bounded_broadcast(
-                        upsert.select("run", "url"),
-                        n_selected + 2 * n_allowed,
-                        bcast_lim,
-                    ),
-                    ["run", "url"],
-                    "left_anti",
-                )
-                # bound partition growth: the union adds upsert's
-                # partitions to the chain every superstep (compounding
-                # task-scheduling overhead); coalesce merges without a
-                # shuffle
-                n_part = max(self.spark.sparkContext.defaultParallelism, 16)
-                chained = survivors_f.unionByName(upsert).coalesce(n_part)
-                fut_chain_f = pool.submit(
-                    _timed("c_chain_f"),
-                    lambda: chained.localCheckpoint(eager=True),
-                )
-                fut_chain_p = pool.submit(
-                    _timed("c_chain_p"),
-                    lambda: pol_new.coalesce(n_part).localCheckpoint(eager=True),
-                )
             fsnap = fut_front.result()
             if self.frontier.delta_count() >= cfg.compact_every:
                 fsnap = self.frontier.compact(fsnap)
@@ -873,17 +824,6 @@ class CrawlEngine:
                     "url_hash",
                 )
                 self.filters.advance(None, step, full_keys, cfg.num_buckets)
-            if fut_chain_f is not None:
-                if compacted:
-                    # prediction raced a concurrent commit: the chained
-                    # images are stale — await and release them so no
-                    # frontier-sized checkpoint leaks into storage
-                    fut_chain_f.result().unpersist()
-                    fut_chain_p.result().unpersist()
-                else:
-                    new_frontier = fut_chain_f.result()
-                    new_politeness = fut_chain_p.result()
-        do_chain = chain and new_frontier is not None
         if compacted:
             # fold the politeness delta chain on the frontier's cadence
             psnap = self.politeness.compact(psnap)
@@ -916,27 +856,10 @@ class CrawlEngine:
         self._commit_state()
         self._write_clock(tick)
 
-        # swap the in-memory table images forward (same latest-wins
-        # semantics as the MoR read; disk already holds the commit). The
-        # chained frontier/politeness were materialized inside the
-        # commit pool above — this is pure pointer swapping.
-        t1 = time.time()
-        if do_chain:
-            frontier.unpersist()
-            self._frontier_df = new_frontier
-            self._politeness_df = new_politeness
-            pol_new.unpersist()
-            politeness.unpersist()
-            phase_t["chain_parts"] = new_frontier.rdd.getNumPartitions()
-        else:
-            frontier.unpersist()
-            politeness.unpersist()
-            pol_new.unpersist()
-            self._frontier_df = None
-            self._politeness_df = None
-        phase_t["chain"] = time.time() - t1
-
-        for df in (selected, fetched, candidates, probed, new_rows, outcome_src, upsert):
+        for df in (
+            frontier, politeness, selected, fetched, candidates, probed,
+            new_rows, outcome_src, upsert,
+        ):
             df.unpersist()
         phase_t["total"] = time.time() - t0
         phase_t["n_selected"] = n_selected

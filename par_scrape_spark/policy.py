@@ -78,18 +78,36 @@ EXCLUDED_EXTENSION_RLIKE = (
 
 _DEFAULT_PORTS = {"http": 80, "https": 443}
 
+# host characters allowed into an artifact path segment (is_valid_url)
+_SAFE_HOST_RE = re.compile(r"[A-Za-z0-9.-]+")
+
 NEXTJS_CLIENT_ERROR_MARKER = (
     "Application error: a client-side exception has occurred"
 )
 
 
 def is_valid_url(url: str) -> bool:
-    """http/https scheme with a non-empty host (reference links.py:37-52)."""
+    """http/https scheme with a non-empty, path-safe host (reference
+    links.py:37-52).
+
+    The host — netloc with userinfo and port stripped, the same parse as
+    ``queue.get_url_output_folder`` — must be made of ``[A-Za-z0-9.-]``
+    and must not contain ``..``, so no queued URL can turn its artifact
+    path ``<run>/<host>/...`` into a traversal. The reference applies
+    this guard at save time and raises (paths.py:35-36); every URL
+    entering the frontier passes through here, so the path builders
+    need no guard of their own.
+    """
     try:
         parts = urlsplit(url)
-        return parts.scheme in ("http", "https") and bool(parts.netloc)
     except ValueError:
         return False
+    host = parts.netloc.rpartition("@")[2].split(":")[0]
+    return (
+        parts.scheme in ("http", "https")
+        and _SAFE_HOST_RE.fullmatch(host) is not None
+        and ".." not in host
+    )
 
 
 def canonicalize_url(url: str) -> str:

@@ -30,6 +30,20 @@ Reference parity map (file:line):
 - ``set_crawl_delay``    — queue_db.py:469
 - ``increase_crawl_delay`` — queue_db.py:512 (min(cur*factor, cap))
 - ``check_robots_txt``   — robots.py:17 (fail-open, E3)
+- ``get_url_output_folder`` — paths.py:9-62 (F14)
+
+Deviations:
+
+- host parse: ``get_url_output_folder`` and ``policy.is_valid_url``
+  take the host as the netloc with userinfo stripped BEFORE the port
+  split (``user:pass@host:80`` → ``host``); the reference takes
+  ``netloc.split(":")[0]`` (paths.py:34) and so returns ``user`` for
+  such URLs (and rejects ``user@host`` for its ``@``).
+- unsafe hosts: a URL whose host has a character outside
+  ``[A-Za-z0-9.-]`` or contains ``..`` (e.g. ``http://../x``) is
+  refused by ``policy.is_valid_url`` — never queued, so it can never
+  yield an artifact path like ``<run>/../x``. The reference queues it
+  and raises when building the save path (paths.py:35-36).
 """
 
 from __future__ import annotations
@@ -331,7 +345,8 @@ def mark_error(
     tick: int = 0,
 ) -> DataFrame:
     """Errored-row delta (queue_db.py:587-623): bounded message (F15,
-    queue_db.py:28), classified type, attempts bump."""
+    queue_db.py:28), classified type; attempts are untouched (selection
+    owns attempt accounting, see ``get_next_urls``)."""
     etype = getattr(error_type, "value", error_type)
     msg = (error_msg or "")[:ERROR_MESSAGE_MAX_LEN]
     return _update_row(

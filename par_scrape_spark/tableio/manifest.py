@@ -18,7 +18,7 @@ interface with a Parquet+manifest backend:
   the real catalog in is an adapter change, not a redesign.
 
 Multi-table atomicity (one crawl superstep commits frontier + payload +
-politeness + lineage) lives one level up in plans/checkpoint.py: a run
+politeness + lineage) lives one level up in plans/crawl.py: a run
 manifest pins one snapshot id per table and is written last.
 """
 
@@ -206,7 +206,9 @@ class SnapshotTable:
         per key. Readers resolve latest-wins; ``compact()`` folds deltas."""
         if not self.key_cols:
             raise ValueError(f"table {self.name} has no key_cols; use append/overwrite")
-        rel = self._write_dir(df, partitioned=False)
+        # written in the table schema, so read() can hand the reader the
+        # schema instead of inferring it from every delta's footers
+        rel = self._write_dir(self._conform(df), partitioned=False)
         with self._commit_lock():
             prev = self._parent_manifest(parent)
             return self._commit(
@@ -220,6 +222,12 @@ class SnapshotTable:
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], self.schema)
+
+    def _conform(self, df: DataFrame) -> DataFrame:
+        """Project + cast ``df`` to exactly the table's columns and types."""
+        return df.select(
+            *[F.col(f.name).cast(f.dataType) for f in self.schema.fields]
+        )
 
     def _read_dirs(self, rels: list[str]) -> DataFrame | None:
         if not rels:
@@ -237,8 +245,7 @@ class SnapshotTable:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
-        cols = [f.name for f in self.schema.fields]
-        return out.select(*[F.col(c).cast(self.schema[c].dataType) for c in cols])
+        return self._conform(out)
 
     def read(self, snapshot: int | None = None) -> DataFrame:
         """Current (or time-travel) state of the table.
@@ -264,7 +271,9 @@ class SnapshotTable:
             path = os.path.join(self.dir, rel)
             try:
                 deltas.append(
-                    self.spark.read.parquet(path).withColumn("_delta_seq", F.lit(i))
+                    self.spark.read.schema(self.schema)
+                    .parquet(path)
+                    .withColumn("_delta_seq", F.lit(i))
                 )
             except Exception:
                 continue
@@ -281,14 +290,10 @@ class SnapshotTable:
             .select(*cols)
         )
         if base is None:
-            return resolved.select(
-                *[F.col(c).cast(self.schema[c].dataType) for c in cols]
-            )
+            return self._conform(resolved)
         delta_keys = resolved.select(*self.key_cols).distinct()
         survivors = base.join(F.broadcast(delta_keys), self.key_cols, "left_anti")
-        return survivors.unionByName(resolved).select(
-            *[F.col(c).cast(self.schema[c].dataType) for c in cols]
-        )
+        return self._conform(survivors.unionByName(resolved))
 
     def delta_count(self) -> int:
         manifest = self._load_manifest(None)

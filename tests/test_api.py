@@ -88,3 +88,15 @@ def test_queue_management(spark):
         assert api.queue_status(engine, "q1").agg({"n": "sum"}).collect()[0][0] == 0
     finally:
         shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_scrape_rejects_unknown_keyword():
+    # a misspelled option must fail loudly, not crawl with the default
+    # (Spark-free: the call is rejected before the body runs)
+    with pytest.raises(TypeError):
+        api.scrape(
+            None,
+            "http://site-00000.example",
+            warehouse=tempfile.gettempdir(),
+            crawl_max_page=5,
+        )

@@ -20,6 +20,29 @@ class TestValidity:
         assert not policy.is_valid_url("http://")
         assert not policy.is_valid_url("")
 
+    def test_host_must_be_path_safe(self):
+        # the host becomes an artifact path segment (<run>/<host>/...):
+        # traversal and non-[A-Za-z0-9.-] hosts never enter the frontier
+        for url in [
+            "http://../x",
+            "http://a..b.example/x",
+            "http://user@../x",
+            "http://..:8080/x",
+            "http://%2e%2e/x",
+            "http://a_b.example/",
+            "http://a\\b.example/x",
+            "http://[::1]/x",
+            "http://user@/x",
+            "http://:8080/x",
+        ]:
+            assert not policy.is_valid_url(url), url
+        # userinfo and port are stripped before the check
+        assert policy.is_valid_url("http://user:pw@site-00001.example:8080/x")
+        assert policy.is_valid_url("HTTP://Example.COM/A")
+        # discovered links pass through the same check
+        html = '<a href="http://../x">a</a><a href="/ok">b</a>'
+        assert policy.extract_links("http://../", html) == []
+
 
 class TestCanonicalize:
     def test_lowercase_and_ports(self):

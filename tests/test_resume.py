@@ -168,3 +168,32 @@ def test_run_state_is_atomic_root(spark):
             assert json.load(f)["snapshots"]["frontier"] == pinned["frontier"]
     finally:
         shutil.rmtree(wh, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_engine_releases_caches(spark):
+    """start() and every superstep release what they cache: the engine
+    holds no table image between supersteps (each superstep reads its
+    pinned snapshots), so the session's persisted-RDD count is back to
+    its starting value after each call — compacting supersteps too."""
+    wh = tempfile.mkdtemp(prefix="res_cache_")
+    try:
+        cfg = CrawlConfig(
+            run_name="cache",
+            seeds=tuple(f"http://site-{i:05d}.example" for i in range(12)),
+            crawl_type=CrawlType.DOMAIN,
+            crawl_batch_size=4,
+            crawl_max_pages=100,
+            web_seed=42,
+            compact_every=2,
+        )
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        eng = CrawlEngine(spark, cfg, wh)
+        eng.start()
+        assert jsc.getPersistentRDDs().size() == before, "after start()"
+        for step in range(1, 4):
+            assert eng.superstep() > 0
+            assert jsc.getPersistentRDDs().size() == before, f"after superstep {step}"
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
