@@ -16,6 +16,16 @@ computes the same dense rank in parallel:
 
 This is SURVEY §2.5 W3 made concrete: the reference's candidate-pool
 over-fetch (queue_db.py:389-406) done distribution-aware.
+
+Known hazard: the pinned layout is an eager ``localCheckpoint``, whose
+``LogicalRDD`` leaf keeps its attribute ids in its canonical form. When
+a query reaches the ranked rows twice (the crawl superstep does, for
+resets, politeness and the lineage union), the analyzer renews one copy
+with fresh ids and cached plans above it stop matching, so their inputs
+are recomputed. The scheduler's pool cut dropped its checkpoint for
+this reason; this one is kept because it makes the sampled range
+boundaries deterministic. The scheduler only reaches it above 2^17
+one-per-host candidates.
 """
 
 from __future__ import annotations

@@ -10,9 +10,11 @@ is a procedural loop, but semantically it is ONE windowed ranking query
    host — broadcast hash join (the politeness table is host-cardinality,
    far smaller than the frontier)
 3. candidate pool (queue_db.py:393): top ``max(batch*25, 100)`` rows by
-   ``(last_access ASC, queued_seq ASC)`` — Spark compiles the
-   orderBy+limit to TakeOrderedAndProject (per-partition top-k, no full
-   sort; this is the reference's over-fetch made distribution-aware, W3)
+   ``(last_access, priority, queued_seq)`` — a lazy orderBy+limit that
+   Spark compiles to TakeOrderedAndProject (per-partition top-k, no full
+   sort; this is the reference's over-fetch made distribution-aware,
+   W3). It is never checkpointed: a checkpoint leaf under the batch
+   breaks the engine's cache matching (see the pool-cut comment)
 4. rate gate (F9, queue_db.py:416-418): host eligible when
    ``last_access == 0 OR tick - last_access >= crawl_delay`` — the
    reference applies this after the pool cut, so we do too (parity)
@@ -93,7 +95,7 @@ def select_batch_with_count(
     rank's offset collect) — saving the engine one count() job per
     superstep. ``eligible_upper``: a caller-tracked upper bound on the
     eligible row count; when it proves the pool cut cannot trigger, the
-    probe job is skipped entirely. Returns (batch_df, n or None)."""
+    top-k is skipped entirely. Returns (batch_df, n or None)."""
     eligible = eligible_rows(frontier, run, retries)
 
     if not respect_rate_limits:
@@ -114,32 +116,24 @@ def select_batch_with_count(
     order = ["last_access", "priority", "queued_seq"]
     # Pool cut (queue_db.py:393): load-bearing only when more candidates
     # exist than the pool admits; the common case (politeness-bounded
-    # batches sized to the host count) skips the top-k entirely. The probe
-    # is a LIMIT pool+1 count — early-exits after pool+1 rows instead of
-    # scanning the whole eligible set like the round-1 full count did.
+    # batches sized to the host count) skips the top-k entirely. The cut
+    # is a lazy top-k: the order is total, and the limit keeps every row
+    # when fewer than pool_size survive, so no count probe is needed.
+    # Pools too large for a driver-merged top-k first probe (LIMIT
+    # pool+1 count) whether the cut triggers at all.
+    #
+    # No checkpoint may sit under the batch. The engine's superstep
+    # reaches the cached batch twice in one query (resets, politeness,
+    # the lineage union), and the analyzer renews one of the repeated
+    # leaves with fresh attribute ids. A checkpoint leaf (LogicalRDD)
+    # keeps those ids in its canonical form, so every cached plan above
+    # it (batch, fetch, probe) stops matching and the fetch/robots/probe
+    # Python chain reruns in each commit. A cached leaf
+    # (InMemoryRelation) normalizes its output and keeps matching.
     pool_size = max(batch_size * CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN)
     if eligible_upper is not None and eligible_upper <= pool_size:
-        pool = joined  # proven: the cut cannot trigger; skip the probe
-    elif pool_size <= 100_000:
-        # probe + materialize fused into ONE job (was two: a LIMIT
-        # pool+1 count over the full frontier, then a separate
-        # TakeOrdered + checkpoint when the cut triggered):
-        # TakeOrdered(pool+1) is simultaneously the cut probe (did more
-        # than pool_size rows survive?) and, when the cut does NOT
-        # trigger, the complete eligible set — identical to ``joined``
-        # as a set. Every downstream job (stats agg, rank, result) then
-        # reads the checkpointed rows instead of re-running the
-        # scan -> broadcast-join chain. Guarded by pool size: top-k
-        # merges on the driver, so million-row pools keep the lazy
-        # probe path below.
-        top = joined.orderBy(*order).limit(pool_size + 1).localCheckpoint(
-            eager=True
-        )
-        if top.count() > pool_size:
-            pool = top.orderBy(*order).limit(pool_size)
-        else:
-            pool = top
-    elif joined.limit(pool_size + 1).count() > pool_size:
+        pool = joined  # proven: the cut cannot trigger; skip the top-k
+    elif pool_size <= 100_000 or joined.limit(pool_size + 1).count() > pool_size:
         pool = joined.orderBy(*order).limit(pool_size)
     else:
         pool = joined

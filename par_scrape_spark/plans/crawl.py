@@ -331,7 +331,7 @@ class CrawlEngine:
             cfg.respect_rate_limits,
             # engine-tracked upper bound on eligible rows (seeds + every
             # superstep's allowed candidates): proves the pool cut can't
-            # trigger and skips its probe job
+            # trigger and skips the top-k
             eligible_upper=self.state.get("frontier_upper"),
         )
         # the batch leaves the ranking window in ONE partition (global

@@ -153,17 +153,23 @@ class SnapshotTable:
     def _write_dir(self, df: DataFrame, partitioned: bool) -> str:
         rel = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
         out = os.path.join(self.dir, rel)
-        writer_df = df
-        writer = None
+        # every dir is written in the table schema, so reads hand the
+        # reader the schema instead of inferring it from the footers (an
+        # empty commit leaves no part file to infer from, yet reads as 0
+        # rows; a missing dir fails the read)
+        df = self._conform(df)
         if partitioned and self.partition_cols:
             # co-locate each partition value into one task before the
             # partitionBy write — otherwise every task emits a file per
             # value it holds (tasks x values tiny files, whose listing
             # then dominates every later scan)
-            writer_df = df.repartition(*[F.col(c) for c in self.partition_cols])
-            writer = writer_df.write.mode("overwrite").partitionBy(*self.partition_cols)
+            writer = (
+                df.repartition(*[F.col(c) for c in self.partition_cols])
+                .write.mode("overwrite")
+                .partitionBy(*self.partition_cols)
+            )
         else:
-            writer = writer_df.write.mode("overwrite")
+            writer = df.write.mode("overwrite")
         writer.parquet(out)
         return rel
 
@@ -206,9 +212,7 @@ class SnapshotTable:
         per key. Readers resolve latest-wins; ``compact()`` folds deltas."""
         if not self.key_cols:
             raise ValueError(f"table {self.name} has no key_cols; use append/overwrite")
-        # written in the table schema, so read() can hand the reader the
-        # schema instead of inferring it from every delta's footers
-        rel = self._write_dir(self._conform(df), partitioned=False)
+        rel = self._write_dir(df, partitioned=False)
         with self._commit_lock():
             prev = self._parent_manifest(parent)
             return self._commit(
@@ -232,16 +236,12 @@ class SnapshotTable:
     def _read_dirs(self, rels: list[str]) -> DataFrame | None:
         if not rels:
             return None
-        dfs = []
-        for rel in rels:
-            path = os.path.join(self.dir, rel)
-            try:
-                dfs.append(self.spark.read.option("basePath", path).parquet(path))
-            except Exception:
-                # a commit of an empty DataFrame leaves no part files
-                continue
-        if not dfs:
-            return None
+        dfs = [
+            self.spark.read.schema(self.schema)
+            .option("basePath", path)
+            .parquet(path)
+            for path in (os.path.join(self.dir, rel) for rel in rels)
+        ]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -266,19 +266,12 @@ class SnapshotTable:
 
         from pyspark.sql import Window
 
-        deltas = []
-        for i, rel in enumerate(manifest["delta_dirs"]):
-            path = os.path.join(self.dir, rel)
-            try:
-                deltas.append(
-                    self.spark.read.schema(self.schema)
-                    .parquet(path)
-                    .withColumn("_delta_seq", F.lit(i))
-                )
-            except Exception:
-                continue
-        if not deltas:
-            return base if base is not None else self._empty()
+        deltas = [
+            self.spark.read.schema(self.schema)
+            .parquet(os.path.join(self.dir, rel))
+            .withColumn("_delta_seq", F.lit(i))
+            for i, rel in enumerate(manifest["delta_dirs"])
+        ]
         delta = deltas[0]
         for d in deltas[1:]:
             delta = delta.unionByName(d)

@@ -175,12 +175,14 @@ def test_engine_releases_caches(spark):
     """start() and every superstep release what they cache: the engine
     holds no table image between supersteps (each superstep reads its
     pinned snapshots), so the session's persisted-RDD count is back to
-    its starting value after each call — compacting supersteps too."""
+    its starting value after each call — compacting supersteps and
+    pool-cut supersteps too. 100 seeds fill the 100-row candidate pool
+    of batch 4 exactly, so the cut first runs in superstep 2."""
     wh = tempfile.mkdtemp(prefix="res_cache_")
     try:
         cfg = CrawlConfig(
             run_name="cache",
-            seeds=tuple(f"http://site-{i:05d}.example" for i in range(12)),
+            seeds=tuple(f"http://site-{i:05d}.example" for i in range(100)),
             crawl_type=CrawlType.DOMAIN,
             crawl_batch_size=4,
             crawl_max_pages=100,

@@ -118,9 +118,10 @@ def test_physical_plan_parallel_rank_and_broadcast(spark):
     p = _politeness(spark, [(f"h{i}", 0, 1) for i in range(50)])
     df = select_batch(f, p, "r", tick=1, batch_size=4)
     plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    # batch ranking went through the checkpointed parallel dense rank
-    # (surfaces as an ExistingRDD scan); every window in the final plan
-    # must be keyed (by partition id or host) — no global window
+    # the ExistingRDD scan is this test's own createDataFrame input (50
+    # hosts at one tick take the dense-seq rank, not the checkpointed
+    # parallel dense rank); every window in the final plan must be keyed
+    # (by partition id or host) — no global window
     assert "existingrdd" in plan
     for line in plan.splitlines():
         if "windowspecdefinition" in line:
@@ -166,3 +167,60 @@ def test_select_batch_with_count_and_pool_skip(spark):
     # fewer candidates than batch: count is the candidate-host count
     _, n_small = select_batch_with_count(f, p, "r", 1, 100, eligible_upper=40)
     assert n_small == 9
+
+
+def _reference_pick(rows, pol, tick, batch_size, pool_size):
+    """The reference rule in plain Python: sort by (last_access,
+    priority, queued_seq), cut to the pool, rate-gate, keep each host's
+    first row, order hosts by that row's key and take the batch."""
+    def key(r):
+        return (pol[r[1]][0], r[4], r[5])
+
+    pool = sorted(rows, key=key)[:pool_size]
+    gated = [
+        r for r in pool
+        if pol[r[1]][0] == 0 or tick - pol[r[1]][0] >= pol[r[1]][1]
+    ]
+    first: dict[str, tuple] = {}
+    for r in gated:
+        first.setdefault(r[1], r)
+    return [r[0] for r in sorted(first.values(), key=key)[:batch_size]]
+
+
+def test_pool_cut_matches_reference_and_is_lazy(spark, tmp_path):
+    """300 eligible rows over 9 hosts with batch 5 trigger the 125-row
+    pool cut; the batch equals the reference rule's pick, and no
+    checkpoint (LogicalRDD leaf) sits under it."""
+    from par_scrape_spark.config import CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN
+
+    batch, tick = 5, 10
+    pool_size = max(batch * CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN)
+    assert pool_size == 125
+    # host -> (last_access, crawl_delay): the least-recent hosts fill
+    # the pool and h8 is gated at tick 10, so the pool holds only four
+    # eligible hosts while a fifth lies beyond the cut
+    pol = {
+        "h0": (0, 1), "h1": (2, 3), "h2": (5, 2), "h3": (0, 1), "h4": (7, 2),
+        "h5": (2, 1), "h6": (9, 5), "h7": (5, 1), "h8": (1, 20),
+    }
+    rows = [
+        (f"u{i}", f"h{i % 9}", "queued", 0, (i * 11) % 4,
+         1000 + (i * 37) % 300)
+        for i in range(300)
+    ]
+    assert len({r[1] for r in rows}) == 9
+    expected = _reference_pick(rows, pol, tick, batch, pool_size)
+    # the cut is load-bearing: without it the pick differs
+    assert expected != _reference_pick(rows, pol, tick, batch, len(rows))
+
+    # parquet inputs, so any LogicalRDD in the plan is the scheduler's own
+    _frontier(spark, rows).write.parquet(str(tmp_path / "f"))
+    _politeness(spark, [(h, la, d) for h, (la, d) in pol.items()]).write.parquet(
+        str(tmp_path / "p")
+    )
+    f = spark.read.parquet(str(tmp_path / "f"))
+    p = spark.read.parquet(str(tmp_path / "p"))
+    df = select_batch(f, p, "r", tick=tick, batch_size=batch)
+    got = [r["url"] for r in df.orderBy("parent_rank").collect()]
+    assert got == expected
+    assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()

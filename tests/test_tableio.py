@@ -1,5 +1,10 @@
 """Snapshot table: commit/read/upsert/time-travel/compaction."""
 
+import os
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -112,3 +117,19 @@ def test_concurrent_appends_lose_nothing(spark, tmp_path):
         seen.append(snap)
         snap = m["parent"]
     assert seen == [8, 7, 6, 5, 4, 3, 2, 1]
+
+
+def test_reads_fail_loudly(spark, tmp_path):
+    """An empty commit reads as 0 rows; a live dir that has gone missing
+    fails the read instead of silently dropping its rows."""
+    t = _table(spark, tmp_path)
+    t.commit_append(_df(spark, []))
+    assert t.read().count() == 0
+    t.commit_overwrite(_df(spark, [(i, "x", i % 2) for i in range(10)]))
+    t.commit_append(_df(spark, []))
+    t.commit_upsert(_df(spark, [(1, "y", 1), (20, "z", 0)]))
+    assert t.read().count() == 11
+    base = t._load_manifest(None)["base_dirs"][0]
+    shutil.rmtree(os.path.join(t.dir, base))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        t.read().count()
