@@ -220,21 +220,17 @@ def q_w1_scheduler_pick(spark, sf_dir):
     the frontier/politeness-shaped projections."""
     from par_scrape_spark.operators.scheduler import select_batch
 
-    # cached as the engine does: a superstep's frontier image is a
-    # cached/localCheckpointed frame, so select_batch's probe count,
-    # rank agg, and result job share one materialization instead of
-    # recomputing the scan->join->window chain three times.
+    # select_batch is one job (pool top-k, one-per-host window, batch
+    # top-k), so its input is read once and needs no cache.
     # AQE off for the same reason CrawlEngine.__init__ disables it:
     # this is a superstep-shaped micro-query (politeness-bounded batch,
     # small shuffles by construction) where AQE's per-shuffle
-    # re-planning round trips dominate the job-count floor — the
-    # remaining seconds are 3 tiny jobs (pool probe, rank-stats agg,
-    # result) at fixed per-job latency, not data volume (PLANS.md
-    # §scheduler-floor).
+    # re-planning round trips dominate — the job costs fixed per-job
+    # latency, not data volume (PLANS.md §scheduler-floor).
     prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        frontier = _frontier_shaped(spark, sf_dir).cache()
+        frontier = _frontier_shaped(spark, sf_dir)
         politeness = _politeness_shaped(spark, sf_dir, W1_TICK)
         batch = select_batch(
             frontier, politeness, "r", W1_TICK, W1_BATCH, retries=3
@@ -1032,8 +1028,8 @@ ORACLES: dict[str, str] = {
     ),
     "w1_scheduler_pick": (
         # full select_batch semantics: eligibility -> politeness join ->
-        # pool cut (top-500 is equivalent whether or not the engine's
-        # probe skips it) -> rate gate -> one-per-host -> global rank
+        # pool cut (top-500, the engine's lazy top-k) -> rate gate ->
+        # one-per-host -> global rank
         "WITH f AS (SELECT user_id % 50 AS hn, "
         "'http://h' || CAST(user_id % 50 AS VARCHAR) || '.ex/p/' || "
         "CAST(event_id AS VARCHAR) AS url, "

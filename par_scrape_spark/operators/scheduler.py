@@ -13,15 +13,20 @@ is a procedural loop, but semantically it is ONE windowed ranking query
    ``(last_access, priority, queued_seq)`` — a lazy orderBy+limit that
    Spark compiles to TakeOrderedAndProject (per-partition top-k, no full
    sort; this is the reference's over-fetch made distribution-aware,
-   W3). It is never checkpointed: a checkpoint leaf under the batch
-   breaks the engine's cache matching (see the pool-cut comment)
+   W3). No probe decides whether it runs: it is skipped only when the
+   caller's ``eligible_upper`` proves the cut cannot trigger, and it is
+   never checkpointed: a checkpoint leaf under the batch breaks the
+   engine's cache matching (see the pool-cut comment)
 4. rate gate (F9, queue_db.py:416-418): host eligible when
    ``last_access == 0 OR tick - last_access >= crawl_delay`` — the
    reference applies this after the pool cut, so we do too (parity)
 5. one-per-host (W1, queue_db.py:413-414):
    ``row_number() over (partition by host order by queued_seq) == 1``
-6. batch cap (W2, queue_db.py:434-435): hosts ordered by
-   ``(last_access, first queued_seq)``, first ``batch`` taken.
+6. batch cap (W2, queue_db.py:434-435): a second top-k takes the first
+   ``batch`` hosts by the same ``(last_access, priority, queued_seq)``
+   order; ``parent_rank`` is ``row_number() - 1`` over those ≤ batch
+   rows. The window sits on the TakeOrderedAndProject, whose output is
+   already one sorted partition, so it adds no exchange and no sort.
 
 Every tie is broken by ``queued_seq`` — the engine's deterministic
 insertion sequence — so selection order is a pure function of state
@@ -38,15 +43,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from par_scrape_spark.config import CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN, PageStatus
-from par_scrape_spark.operators.ranking import dense_rank_parallel_with_count
-
-# Below this many one-per-host candidates the batch rank runs as a
-# single-partition window (a sub-millisecond sort riding the result
-# job) instead of the 3-job parallel dense rank; above it, the parallel
-# rank keeps the sort distributed. An algorithm switch on measured
-# cardinality, not a local-mode tune: 2^17 rows is a trivial single-task
-# sort on any executor, web-scale host counts take the parallel path.
-SINGLE_PARTITION_RANK_MAX = 1 << 17
 
 
 def eligible_rows(frontier: DataFrame, run: str, retries: int) -> DataFrame:
@@ -63,6 +59,18 @@ def eligible_rows(frontier: DataFrame, run: str, retries: int) -> DataFrame:
     )
 
 
+def _ranked_top(df: DataFrame, order: list[str], k: int) -> DataFrame:
+    """The first ``k`` rows by ``order`` (a total order), with
+    ``parent_rank`` their 0-based position. The global window only ever
+    sees the ≤ k rows of the top-k."""
+    w = Window.orderBy(*order)
+    return (
+        df.orderBy(*order)
+        .limit(k)
+        .withColumn("parent_rank", (F.row_number().over(w) - 1).cast("long"))
+    )
+
+
 def select_batch(
     frontier: DataFrame,
     politeness: DataFrame,
@@ -71,41 +79,21 @@ def select_batch(
     batch_size: int,
     retries: int = 3,
     respect_rate_limits: bool = True,
+    eligible_upper: int | None = None,
 ) -> DataFrame:
     """Select the next batch. Returns the chosen frontier rows plus
     ``last_access``, ``crawl_delay``, and ``parent_rank`` (0-based batch
-    position, the deterministic input to child queued_seq assignment)."""
-    return select_batch_with_count(
-        frontier, politeness, run, tick, batch_size, retries, respect_rate_limits
-    )[0]
-
-
-def select_batch_with_count(
-    frontier: DataFrame,
-    politeness: DataFrame,
-    run: str,
-    tick: int,
-    batch_size: int,
-    retries: int = 3,
-    respect_rate_limits: bool = True,
-    eligible_upper: int | None = None,
-) -> tuple[DataFrame, int | None]:
-    """select_batch plus the exact selected-row count when it is free
-    metadata (min(one-per-host candidates, batch) from the parallel
-    rank's offset collect) — saving the engine one count() job per
-    superstep. ``eligible_upper``: a caller-tracked upper bound on the
-    eligible row count; when it proves the pool cut cannot trigger, the
-    top-k is skipped entirely. Returns (batch_df, n or None)."""
+    position, the deterministic input to child queued_seq assignment).
+    ``eligible_upper``: a caller-tracked upper bound on the eligible row
+    count; when it proves the pool cut cannot trigger, the pool top-k is
+    skipped."""
     eligible = eligible_rows(frontier, run, retries)
 
     if not respect_rate_limits:
-        pool = eligible.orderBy("queued_seq").limit(batch_size)
-        w = Window.orderBy("queued_seq")  # batch-bounded rows only
         return (
-            pool.withColumn("parent_rank", (F.row_number().over(w) - 1).cast("long"))
+            _ranked_top(eligible, ["queued_seq"], batch_size)
             .withColumn("last_access", F.lit(0).cast("long"))
-            .withColumn("crawl_delay", F.lit(1)),
-            None,
+            .withColumn("crawl_delay", F.lit(1))
         )
 
     pol = politeness.select("host", "last_access", "crawl_delay")
@@ -119,8 +107,6 @@ def select_batch_with_count(
     # batches sized to the host count) skips the top-k entirely. The cut
     # is a lazy top-k: the order is total, and the limit keeps every row
     # when fewer than pool_size survive, so no count probe is needed.
-    # Pools too large for a driver-merged top-k first probe (LIMIT
-    # pool+1 count) whether the cut triggers at all.
     #
     # No checkpoint may sit under the batch. The engine's superstep
     # reaches the cached batch twice in one query (resets, politeness,
@@ -132,11 +118,9 @@ def select_batch_with_count(
     # (InMemoryRelation) normalizes its output and keeps matching.
     pool_size = max(batch_size * CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN)
     if eligible_upper is not None and eligible_upper <= pool_size:
-        pool = joined  # proven: the cut cannot trigger; skip the top-k
-    elif pool_size <= 100_000 or joined.limit(pool_size + 1).count() > pool_size:
-        pool = joined.orderBy(*order).limit(pool_size)
+        pool = joined  # proven: the cut cannot trigger
     else:
-        pool = joined
+        pool = joined.orderBy(*order).limit(pool_size)
 
     gated = pool.filter(
         (F.col("last_access") == 0)
@@ -149,59 +133,10 @@ def select_batch_with_count(
         .filter(F.col("_hrn") == 1)
         .drop("_hrn")
     )
+    return _ranked_top(first_per_host, order, batch_size)
 
-    # Dense-seq fast path: when every candidate shares one
-    # (last_access, priority) and the queued_seqs are consecutive, the
-    # batch rank is just ``queued_seq - min`` — a pure column expression
-    # needing no rank materialization. One cheap agg proves it (count ==
-    # max-min+1 over unique seqs), replacing the parallel dense rank's
-    # three jobs (range-sample, checkpoint, offset collect) with one.
-    # This is the dominant shape in practice — a fresh frontier, or any
-    # superstep where all hosts were last touched at the same tick — and
-    # it is deterministic under re-evaluation because the rank depends
-    # only on row values, never on partition placement. Non-dense
-    # supersteps pay the one probe agg and fall back.
-    stats = first_per_host.agg(
-        F.count("*").alias("n"),
-        F.min("queued_seq").alias("mn"),
-        F.max("queued_seq").alias("mx"),
-        F.countDistinct("last_access").alias("nla"),
-        F.countDistinct("priority").alias("npr"),
-    ).collect()[0]
-    total = int(stats["n"])
-    if total == 0:
-        return (
-            first_per_host.withColumn("parent_rank", F.lit(0).cast("long")),
-            0,
-        )
-    if (
-        stats["nla"] == 1
-        and stats["npr"] == 1
-        and int(stats["mx"]) - int(stats["mn"]) + 1 == total
-    ):
-        ranked = first_per_host.withColumn(
-            "parent_rank",
-            (F.col("queued_seq") - F.lit(int(stats["mn"]))).cast("long"),
-        )
-    elif total <= SINGLE_PARTITION_RANK_MAX:
-        # The candidate set is measured-small (one row per host, count
-        # known for free from the stats agg): a single-partition window
-        # sort of ``total`` rows costs milliseconds inside the result
-        # job, while the parallel dense rank pays three fixed-latency
-        # jobs (range-sample, checkpoint, offset collect). Same ranks —
-        # row_number over the same total order.
-        w = Window.orderBy(*order)
-        ranked = first_per_host.withColumn(
-            "parent_rank", (F.row_number().over(w) - 1).cast("long")
-        )
-    else:
-        # Batch rank over one-row-per-host candidates (host-bounded):
-        # the parallel dense rank avoids a single-partition window over
-        # what is a #hosts-sized set at web scale.
-        ranked, total = dense_rank_parallel_with_count(
-            first_per_host, order, "parent_rank"
-        )
-    return (
-        ranked.filter(F.col("parent_rank") < batch_size),
-        min(total, batch_size),
-    )
+
+def select_batch_with_count(*args, **kwargs) -> tuple[DataFrame, None]:
+    """Compatibility form of select_batch for the benchmark's superstep
+    replay: the batch plus no count (callers count the batch)."""
+    return select_batch(*args, **kwargs), None

@@ -321,7 +321,7 @@ class CrawlEngine:
         frontier = self._read_table(self.frontier, "frontier").cache()
         politeness = self._read_table(self.politeness, "politeness").cache()
 
-        selected, n_known = scheduler.select_batch_with_count(
+        selected = scheduler.select_batch(
             frontier,
             politeness,
             run,
@@ -334,14 +334,12 @@ class CrawlEngine:
             # trigger and skips the top-k
             eligible_upper=self.state.get("frontier_upper"),
         )
-        # the batch leaves the ranking window in ONE partition (global
-        # top-k); spread it across host buckets before the parallel
-        # fetch/extract stages or they run on a single core
+        # the batch leaves the scheduler's top-k in ONE partition; spread
+        # it across host buckets before the parallel fetch/extract stages
+        # or they run on a single core
         selected = selected.repartition(F.col("host_salt")).cache()
-        # n comes free from the scheduler's rank-offset collect (one
-        # fewer Spark job per superstep); the cache fills in the first
-        # downstream job
-        n_selected = selected.count() if n_known is None else n_known
+        # the count fills the batch cache; every later job reads the cache
+        n_selected = selected.count()
         phase_t["select"] = time.time() - t0
         if n_selected == 0:
             self.state["done"] = True

@@ -88,9 +88,10 @@ sections.append(
     (
         "Scheduler select_batch (J1 + W1-W3)",
         "Must show: BroadcastHashJoin for the politeness join (host-"
-        "cardinality table), RangePartitioning for both global rankings "
-        "(parallel dense rank — no single-partition Window over the "
-        "frontier), and a host-keyed Window for the one-per-host pick.",
+        "cardinality table), a host-keyed Window for the one-per-host "
+        "pick, and TakeOrderedAndProject(limit=batch) directly under the "
+        "only unkeyed Window (the batch rank sees ≤ batch rows, with no "
+        "exchange and no sort of its own).",
         sel,
     )
 )

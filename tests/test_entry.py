@@ -115,3 +115,12 @@ def test_j4_agg_form_equals_window_form(spark):
         .collect()
     )
     assert got == want
+
+
+def test_w1_scheduler_pick_leaves_no_cache(spark):
+    """q_w1_scheduler_pick caches nothing: the session's persisted-RDD
+    count is unchanged after its result is collected."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    entrymod.q_w1_scheduler_pick(spark, SF_DIR).collect()
+    assert jsc.getPersistentRDDs().size() == before

@@ -108,26 +108,40 @@ def test_priority_orders_within_host(spark):
     assert [r["url"] for r in got] == ["u2"]
 
 
+def _plan_nodes(node):
+    """Every node of a physical plan (AQE's initial plan unwrapped)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    kids = node.children()
+    yield node
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
 def test_physical_plan_parallel_rank_and_broadcast(spark):
-    """The global rankings must be range-partitioned (parallel dense
-    rank, never a single-partition window over the whole batch) and the
-    politeness join must be broadcast."""
+    """No global window sees more than the batch: every unkeyed window's
+    input is the batch top-k (TakeOrderedAndProject with the batch
+    limit), so it adds no exchange and no sort. The politeness join must
+    be broadcast."""
     f = _frontier(
         spark, [(f"u{i}", f"h{i}", "queued", 0, 0, i) for i in range(50)]
     )
     p = _politeness(spark, [(f"h{i}", 0, 1) for i in range(50)])
-    df = select_batch(f, p, "r", tick=1, batch_size=4)
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    # the ExistingRDD scan is this test's own createDataFrame input (50
-    # hosts at one tick take the dense-seq rank, not the checkpointed
-    # parallel dense rank); every window in the final plan must be keyed
-    # (by partition id or host) — no global window
-    assert "existingrdd" in plan
-    for line in plan.splitlines():
-        if "windowspecdefinition" in line:
-            assert "_pid" in line or "host" in line, line
-    # politeness join upstream (inside the checkpointed segment) is
-    # asserted on its own plan:
+    for respect in (True, False):
+        df = select_batch(
+            f, p, "r", tick=1, batch_size=4, respect_rate_limits=respect
+        )
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        unkeyed = [
+            n for n in nodes
+            if n.nodeName() == "Window" and n.partitionSpec().isEmpty()
+        ]
+        assert unkeyed, "the batch rank window is missing"
+        for w in unkeyed:
+            child = w.child()
+            assert child.nodeName() == "TakeOrderedAndProject", child.toString()
+            assert child.limit() == 4
+    # politeness join upstream is asserted on its own plan:
     joined = f.join(
         __import__("pyspark.sql.functions", fromlist=["broadcast"]).broadcast(
             p.select("host", "last_access", "crawl_delay")
@@ -144,9 +158,9 @@ def test_status_values_complete():
 
 
 def test_select_batch_with_count_and_pool_skip(spark):
-    """The free count equals min(one-per-host candidates, batch); the
-    eligible_upper fast path (skip the pool probe) returns the same batch
-    as the probe path."""
+    """The eligible_upper skip (no pool top-k) and the pool top-k return
+    the same batch; the benchmark's compatibility form returns it with
+    no count."""
     from par_scrape_spark.operators.scheduler import select_batch_with_count
 
     rows = [
@@ -155,18 +169,17 @@ def test_select_batch_with_count_and_pool_skip(spark):
     f = _frontier(spark, rows)
     p = _politeness(spark, [(f"h{i}", 0, 1) for i in range(9)])
 
-    probe_df, n_probe = select_batch_with_count(f, p, "r", 1, 5)
-    skip_df, n_skip = select_batch_with_count(
-        f, p, "r", 1, 5, eligible_upper=40
-    )
-    assert n_probe == n_skip == 5  # min(9 hosts, batch 5)
-    got_a = sorted((r["url"], r["parent_rank"]) for r in probe_df.collect())
+    topk_df, n = select_batch_with_count(f, p, "r", 1, 5)
+    assert n is None
+    skip_df = select_batch(f, p, "r", 1, 5, eligible_upper=40)
+    assert topk_df.count() == skip_df.count() == 5  # min(9 hosts, batch 5)
+    got_a = sorted((r["url"], r["parent_rank"]) for r in topk_df.collect())
     got_b = sorted((r["url"], r["parent_rank"]) for r in skip_df.collect())
     assert got_a == got_b
 
-    # fewer candidates than batch: count is the candidate-host count
-    _, n_small = select_batch_with_count(f, p, "r", 1, 100, eligible_upper=40)
-    assert n_small == 9
+    # fewer candidates than batch: the batch is every candidate host
+    assert select_batch(f, p, "r", 1, 100, eligible_upper=40).count() == 9
+    assert select_batch(f, p, "r", 1, 100).count() == 9
 
 
 def _reference_pick(rows, pol, tick, batch_size, pool_size):
@@ -224,3 +237,33 @@ def test_pool_cut_matches_reference_and_is_lazy(spark, tmp_path):
     got = [r["url"] for r in df.orderBy("parent_rank").collect()]
     assert got == expected
     assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_multi_partition_rank_exact_and_deterministic(spark):
+    """About 3000 hosts x 2 rows over 8 partitions, mixed last_access and
+    priority, batch 200: the 5000-row pool cut triggers, the batch equals
+    the reference rule's pick, parent_rank is exactly 0..n-1 in pick
+    order, and two evaluations of the same DataFrame agree."""
+    from par_scrape_spark.config import CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN
+
+    batch, tick, n_hosts = 200, 10, 3000
+    pool_size = max(batch * CANDIDATE_POOL_FACTOR, CANDIDATE_POOL_MIN)
+    pol = {f"h{i}": ((i * 7) % 10, 1 + i % 4) for i in range(n_hosts)}
+    rows = [
+        (f"u{j}", f"h{j % n_hosts}", "queued", 0, (j * 11) % 3,
+         10_000 + (j * 7919) % (2 * n_hosts))
+        for j in range(2 * n_hosts)
+    ]
+    assert len(rows) > pool_size
+    expected = _reference_pick(rows, pol, tick, batch, pool_size)
+    assert len(expected) == batch
+
+    f = _frontier(spark, rows).repartition(8)
+    p = _politeness(spark, [(h, la, d) for h, (la, d) in pol.items()])
+    df = select_batch(f, p, "r", tick=tick, batch_size=batch)
+    first = [(r["url"], r["parent_rank"]) for r in df.collect()]
+    second = [(r["url"], r["parent_rank"]) for r in df.collect()]
+    picked = sorted(first, key=lambda t: t[1])
+    assert [u for u, _ in picked] == expected
+    assert [r for _, r in picked] == list(range(batch))
+    assert sorted(first) == sorted(second)
