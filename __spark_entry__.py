@@ -222,24 +222,12 @@ def q_w1_scheduler_pick(spark, sf_dir):
 
     # select_batch is one job (pool top-k, one-per-host window, batch
     # top-k), so its input is read once and needs no cache.
-    # AQE off for the same reason CrawlEngine.__init__ disables it:
-    # this is a superstep-shaped micro-query (politeness-bounded batch,
-    # small shuffles by construction) where AQE's per-shuffle
-    # re-planning round trips dominate — the job costs fixed per-job
-    # latency, not data volume (PLANS.md §scheduler-floor).
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        frontier = _frontier_shaped(spark, sf_dir)
-        politeness = _politeness_shaped(spark, sf_dir, W1_TICK)
-        batch = select_batch(
-            frontier, politeness, "r", W1_TICK, W1_BATCH, retries=3
-        )
-        return batch.select("host", "url", "queued_seq", "parent_rank").orderBy(
-            "parent_rank"
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+    frontier = _frontier_shaped(spark, sf_dir)
+    politeness = _politeness_shaped(spark, sf_dir, W1_TICK)
+    batch = select_batch(frontier, politeness, "r", W1_TICK, W1_BATCH, retries=3)
+    return batch.select("host", "url", "queued_seq", "parent_rank").orderBy(
+        "parent_rank"
+    )
 
 
 def q_w3_pool_prelimit(spark, sf_dir):

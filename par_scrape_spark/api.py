@@ -189,30 +189,6 @@ def queue_reset(engine: CrawlEngine, run: str) -> int:
 # ----------------------------------------------------- exports (S6)
 
 
-def export_payload(
-    payload: DataFrame, out_dir: str, formats: tuple[str, ...] = ("parquet",)
-) -> dict[str, str]:
-    """S6 (scrape_data.py:148-239): write the payload table in the
-    requested formats. Binary columns are hex-encoded for text formats."""
-    from pyspark.sql import functions as F
-
-    paths: dict[str, str] = {}
-    for fmt in formats:
-        path = f"{out_dir.rstrip('/')}/{fmt}"
-        if fmt == "parquet":
-            payload.write.mode("overwrite").parquet(path)
-        elif fmt in ("json", "csv"):
-            text_safe = payload.withColumn("bytes", F.hex(F.col("bytes")))
-            if fmt == "json":
-                text_safe.write.mode("overwrite").json(path)
-            else:
-                text_safe.write.mode("overwrite").option("header", True).csv(path)
-        else:
-            raise ValueError(f"unsupported export format {fmt!r}")
-        paths[fmt] = path
-    return paths
-
-
 def _markdown_table(pdf) -> str:
     """df.to_markdown analogue without the tabulate dependency
     (reference scrape_data.py:231)."""

@@ -28,10 +28,10 @@ Design — random-hyperplane LSH (SimHash-for-vectors), multi-probe:
    operating point is Hamming ≤ 2 — 37/256 ≈ 14.5% scanned — tuned so
    recall@10 ≥ 0.8 on clustered corpora (sibling cosine ≈ 0.95 means
    per-plane split probability θ/π ≈ 0.1, so P[≤2 of 8 bits differ] ≈
-   0.96; the bench's planted-locality corpus tracks the measured
-   number, BENCH/BASELINE.md). On isotropic random vectors recall is
-   geometry-bounded regardless of probe width — neighbors near 90°
-   decorrelate the sign bits.
+   0.96; ``tests/test_ann.py::test_default_operating_point_recall``
+   checks the curve on a planted-cluster corpus). On isotropic random
+   vectors recall is geometry-bounded regardless of probe width —
+   neighbors near 90° decorrelate the sign bits.
 3. **Search**: exact cosine top-k *inside* the probed buckets — an IN
    filter Catalyst pushes into the scan, then orderBy+limit, which
    Spark executes as TakeOrderedAndProject (per-partition top-k, no

@@ -266,15 +266,8 @@ class FilterStore:
     def step_dir(self, step: int) -> str:
         return os.path.join(self.root, f"step-{step:08d}")
 
-    def bucket_path(self, step: int, bucket: int) -> str:
-        return os.path.join(self.step_dir(step), f"bucket-{bucket:05d}.npz")
-
     def exists(self, step: int) -> bool:
         return os.path.isdir(self.step_dir(step))
-
-    def load_bucket(self, step: int, bucket: int) -> SeenFilter | None:
-        path = self.bucket_path(step, bucket)
-        return SeenFilter.load(path) if os.path.exists(path) else None
 
     def advance(self, prev_step: int | None, step: int, updates_df, num_buckets: int) -> None:
         """Write the step's filter sidecars: buckets with new keys are

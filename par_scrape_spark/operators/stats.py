@@ -1,4 +1,4 @@
-"""Queue inspection & repair operators (A1/A2/A7, J4, O3/O6/O7).
+"""Queue inspection & repair operators (A1/A2, J4, O3/O6/O7).
 
 DataFrame re-expressions of the reference's repository helpers
 (/root/reference/src/par_scrape/queue_db.py) and queue CLI
@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from par_scrape_spark.config import ERROR_MESSAGE_MAX_LEN, PageStatus
+from par_scrape_spark.config import PageStatus
 
 ALL_STATUSES = [s.value for s in PageStatus]
 
@@ -39,16 +39,6 @@ def list_runs(frontier: DataFrame) -> DataFrame:
         .count()
         .na.fill(0, ALL_STATUSES)
     )
-
-
-def run_ok(frontier: DataFrame, run: str) -> bool:
-    """A7 (api.py:64-67): every page completed."""
-    n_bad = (
-        frontier.filter(
-            (F.col("run") == run) & (F.col("status") != PageStatus.COMPLETED.value)
-        ).limit(1).count()
-    )
-    return n_bad == 0
 
 
 def get_run_pages(frontier: DataFrame, run: str) -> DataFrame:
@@ -98,40 +88,6 @@ def find_completed_by_hash(
     )
 
 
-def memo_join(pages: DataFrame, history: DataFrame) -> DataFrame:
-    """J4 batch form (the --if-changed path, runner.py:539-552): join the
-    superstep's completed pages against historical completed rows of
-    *other* runs on (url, content_hash); pick the latest prior row per
-    key. Adds ``prior_file_refs`` (NULL = no reuse)."""
-    hist = history.filter(F.col("status") == PageStatus.COMPLETED.value).select(
-        F.col("run").alias("prior_run"),
-        "url",
-        "content_hash",
-        F.col("file_refs").alias("prior_file_refs"),
-        "queued_seq",
-    )
-    w = Window.partitionBy("url", "content_hash").orderBy(F.col("queued_seq").desc())
-    joined = (
-        pages.alias("p")
-        .join(
-            hist.alias("h"),
-            (F.col("p.url") == F.col("h.url"))
-            & (F.col("p.content_hash") == F.col("h.content_hash"))
-            & (F.col("p.run") != F.col("h.prior_run")),
-            "left",
-        )
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(
-            Window.partitionBy("p.run", "p.url").orderBy(
-                F.col("h.queued_seq").desc_nulls_last()
-            )
-        ))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def requeue_errors(frontier: DataFrame, run: str) -> DataFrame:
     """O6 (queue_db.py:713-735): reset every errored page of the run to
     queued, clearing errors and attempts. Returns the *changed rows only*
@@ -151,11 +107,6 @@ def delete_run(frontier: DataFrame, run: str) -> DataFrame:
     """O7 (queue_db.py:738-755): frontier with the run's rows removed
     (caller overwrite-commits)."""
     return frontier.filter(F.col("run") != run)
-
-
-def truncate_error(msg_col):
-    """F15: bounded error payload."""
-    return F.substring(msg_col, 1, ERROR_MESSAGE_MAX_LEN)
 
 
 def cost_summary(

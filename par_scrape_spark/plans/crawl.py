@@ -44,6 +44,7 @@ from par_scrape_spark import policy
 from par_scrape_spark.config import (
     BACKOFF_CAP,
     BACKOFF_FACTOR,
+    ERROR_MESSAGE_MAX_LEN,
     CrawlConfig,
     PageStatus,
 )
@@ -68,6 +69,7 @@ from par_scrape_spark.schemas import (
     LINEAGE_SCHEMA,
     PAYLOAD_SCHEMA,
     POLITENESS_SCHEMA,
+    align_frontier,
 )
 from par_scrape_spark.tableio import SnapshotTable
 
@@ -221,7 +223,7 @@ class CrawlEngine:
             .withColumn("queued_at", F.lit(0).cast("long"))
             .withColumn("queued_seq", F.col("queued_seq").cast("long"))
         )
-        frontier_rows = self._align_frontier(rows).cache()
+        frontier_rows = align_frontier(rows).cache()
         # upsert, not overwrite: the frontier is shared across runs
         # (INSERT OR IGNORE analogue — existing (run,url) keys of other
         # runs untouched; re-seeding the same run replaces its seed rows)
@@ -283,25 +285,11 @@ class CrawlEngine:
         stale = stale.withColumn("status", F.lit(PageStatus.QUEUED.value))
         if stale.limit(1).count() > 0:
             snap = self.frontier.commit_upsert(
-                self._align_frontier(stale),
+                align_frontier(stale),
                 parent=self.state["snapshots"].get("frontier", 0),
             )
             self.state["snapshots"]["frontier"] = snap
             self._commit_state()
-
-    # ------------------------------------------------------------ helpers
-
-    def _align_frontier(self, df: DataFrame) -> DataFrame:
-        """Project/cast to the exact frontier schema, adding NULL/default
-        columns that are absent."""
-        cols = []
-        present = set(df.columns)
-        for field in FRONTIER_SCHEMA.fields:
-            if field.name in present:
-                cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-            else:
-                cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        return df.select(*cols)
 
     # ------------------------------------------------------------ superstep
 
@@ -532,7 +520,8 @@ class CrawlEngine:
                 "error_type", F.when(is_err, classify_error_col(err_msg))
             )
             .withColumn(
-                "error_msg", F.when(is_err, F.substring(err_msg, 1, 255))
+                "error_msg",
+                F.when(is_err, F.substring(err_msg, 1, ERROR_MESSAGE_MAX_LEN)),
             )
             .withColumn("scraped", F.when(~is_err, F.lit(tick).cast("long")))
             .withColumn(
@@ -591,9 +580,9 @@ class CrawlEngine:
         )
 
         upsert = (
-            self._align_frontier(outcomes)
-            .unionByName(self._align_frontier(resets))
-            .unionByName(self._align_frontier(new_frontier_rows))
+            align_frontier(outcomes)
+            .unionByName(align_frontier(resets))
+            .unionByName(align_frontier(new_frontier_rows))
         )
 
         # politeness reconciliation: selected hosts advance last_access;

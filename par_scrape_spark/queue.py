@@ -58,7 +58,11 @@ from par_scrape_spark.config import ERROR_MESSAGE_MAX_LEN, ErrorType, PageStatus
 from par_scrape_spark.functions.urls import with_url_identity
 from par_scrape_spark.operators.robots import DEFAULT_USER_AGENT
 from par_scrape_spark.operators.scheduler import select_batch
-from par_scrape_spark.schemas import FRONTIER_SCHEMA, POLITENESS_SCHEMA
+from par_scrape_spark.schemas import (
+    FRONTIER_SCHEMA,
+    POLITENESS_SCHEMA,
+    align_frontier,
+)
 from par_scrape_spark.tableio.manifest import SnapshotTable
 
 
@@ -102,17 +106,6 @@ def init_db(spark: SparkSession, warehouse: str) -> dict[str, SnapshotTable]:
     return make_tables(spark, warehouse)
 
 
-def _align(df: DataFrame) -> DataFrame:
-    cols = []
-    present = set(df.columns)
-    for field in FRONTIER_SCHEMA.fields:
-        if field.name in present:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
-
-
 def add_to_queue(
     frontier: DataFrame,
     run: str,
@@ -145,7 +138,7 @@ def add_to_queue(
             seen.add(c)
             canon.append(c)
     if not canon:
-        return _align(spark.createDataFrame([], FRONTIER_SCHEMA))
+        return align_frontier(spark.createDataFrame([], FRONTIER_SCHEMA))
 
     existing = frontier.filter(F.col("run") == run)
     # ``urls`` is a driver-side iterable by contract (the reference takes
@@ -181,7 +174,7 @@ def add_to_queue(
             .withColumn("queued_at", F.lit(queued_at).cast("long"))
             .withColumn("queued_seq", F.col("queued_seq").cast("long"))
         )
-        parts.append(_align(fresh))
+        parts.append(align_frontier(fresh))
     errored = [u for u, s in status_of.items() if s == PageStatus.ERROR.value]
     if errored:
         # reference reset (queue_db.py:335-343): status AND the error
@@ -193,9 +186,9 @@ def add_to_queue(
             .withColumn("error_type", F.lit(None).cast("string"))
             .withColumn("error_msg", F.lit(None).cast("string"))
         )
-        parts.append(_align(reset))
+        parts.append(align_frontier(reset))
     if not parts:
-        return _align(spark.createDataFrame([], FRONTIER_SCHEMA))
+        return align_frontier(spark.createDataFrame([], FRONTIER_SCHEMA))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -242,7 +235,7 @@ def get_next_urls(
     urls = [r["url"] for r in rows]
     spark = frontier.sparkSession
     if not rows:
-        return urls, _align(
+        return urls, align_frontier(
             spark.createDataFrame([], FRONTIER_SCHEMA)
         ), spark.createDataFrame([], POLITENESS_SCHEMA)
     f_delta = (
@@ -258,7 +251,7 @@ def get_next_urls(
         # reference's selection path never touches domain_rate_limit
         # (queue_db.py:438-448) — no last_access advance, no host
         # seeding; the politeness delta is empty
-        return urls, _align(f_delta), spark.createDataFrame(
+        return urls, align_frontier(f_delta), spark.createDataFrame(
             [], POLITENESS_SCHEMA
         )
     hosts = sorted({r["host"] for r in rows if r["host"] is not None})
@@ -276,7 +269,7 @@ def get_next_urls(
                 POLITENESS_SCHEMA,
             )
         )
-    return urls, _align(f_delta), p_delta
+    return urls, align_frontier(f_delta), p_delta
 
 
 def _update_row(
@@ -290,7 +283,7 @@ def _update_row(
     row = frontier.filter((F.col("run") == run) & (F.col("url") == canon))
     for name, col in updates.items():
         row = row.withColumn(name, col)
-    return _align(row)
+    return align_frontier(row)
 
 
 def mark_complete(

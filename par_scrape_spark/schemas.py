@@ -16,6 +16,8 @@ lineage    — per-(superstep, host_bucket) counters: fetch counts, robots
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FRONTIER_SCHEMA = T.StructType(
@@ -40,6 +42,21 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("queued_seq", T.LongType(), False),  # determinism tiebreak
     ]
 )
+
+
+def align_frontier(df: DataFrame) -> DataFrame:
+    """Project ``df`` onto FRONTIER_SCHEMA: present columns are cast to
+    their field type, absent ones become typed NULLs."""
+    present = set(df.columns)
+    return df.select(
+        *(
+            (F.col(f.name) if f.name in present else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in FRONTIER_SCHEMA.fields
+        )
+    )
+
 
 POLITENESS_SCHEMA = T.StructType(
     [

@@ -28,6 +28,7 @@ from par_scrape_spark.config import (
     BACKOFF_FACTOR,
     CANDIDATE_POOL_FACTOR,
     CANDIDATE_POOL_MIN,
+    ERROR_MESSAGE_MAX_LEN,
     SEQ_PARENT_SHIFT,
     SEQ_SUPERSTEP_SHIFT,
     CrawlConfig,
@@ -223,7 +224,7 @@ def simulate(config: CrawlConfig, max_supersteps: int = 10_000) -> SimState:
                 row.scraped = tick
             else:
                 row.status = "error"
-                row.error_msg = err[:255]
+                row.error_msg = err[:ERROR_MESSAGE_MAX_LEN]
                 row.error_type = policy.classify_error_message(err)
                 if row.error_type in ("network", "timeout"):
                     ph = st.politeness[_host_of(row.url)]

@@ -37,24 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from par_scrape_spark.functions.urls import valid_url_udf, with_url_identity
-from par_scrape_spark.schemas import FRONTIER_SCHEMA
+from par_scrape_spark.schemas import align_frontier
 from par_scrape_spark.tableio import SnapshotTable
 
 # queued_seq space per micro-batch: batch b occupies
 # [base + b*SEQ_STRIDE, base + b*SEQ_STRIDE + rows) — deterministic
 # under replay (seq depends only on (batch_id, url sort order))
 SEQ_STRIDE = 1 << 30
-
-
-def _align(df: DataFrame) -> DataFrame:
-    cols = {f.name for f in df.schema.fields}
-    out = df
-    for field in FRONTIER_SCHEMA.fields:
-        if field.name not in cols:
-            out = out.withColumn(
-                field.name, F.lit(None).cast(field.dataType)
-            )
-    return out.select([f.name for f in FRONTIER_SCHEMA.fields])
 
 
 def stream_ingest_seeds(
@@ -102,7 +91,7 @@ def stream_ingest_seeds(
             .withColumn("priority", F.lit(0).cast("long"))
             .withColumn("queued_at", F.lit(batch_id).cast("long"))
         )
-        frontier.commit_upsert(_align(rows))
+        frontier.commit_upsert(align_frontier(rows))
 
     writer = url_stream.writeStream.foreachBatch(_ingest).trigger(
         availableNow=True
