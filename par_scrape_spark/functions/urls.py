@@ -1,4 +1,4 @@
-"""URL column expressions (JVM fast path) and the policy UDFs.
+"""URL column expressions (JVM fast path) and the policy UDF.
 
 Two tiers, per SURVEY §2.2:
 
@@ -6,10 +6,9 @@ Two tiers, per SURVEY §2.2:
   (extension filter F2, segment filter F3, host extraction, hashing) —
   these stay inside whole-stage codegen.
 - vectorized pandas UDFs for the parts that must be exactly the policy
-  functions the simulator runs: ``canonicalize_udf`` (full
+  function the simulator runs: ``canonicalize_udf`` (full
   canonicalization incl. default-port stripping, reference
-  queue_db.py:319 — so seen-set identity is bit-deterministic) and
-  ``valid_url_udf`` (F1 validity incl. the path-safe host check).
+  queue_db.py:319 — so seen-set identity is bit-deterministic).
 
 ``url_hash`` is always computed JVM-side with ``F.xxhash64`` *after*
 canonicalization, so the hash definition lives in one place (Spark's
@@ -110,12 +109,6 @@ def output_folder_col(run: Column, url: Column) -> Column:
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     """F13: canonical seen-set form of each URL (vectorized Arrow batch)."""
     return urls.map(lambda u: policy.canonicalize_url(u) if u is not None else None)
-
-
-@F.pandas_udf(T.BooleanType())
-def valid_url_udf(urls: pd.Series) -> pd.Series:
-    """Python-exact F1 (used where parity with the simulator matters)."""
-    return urls.map(lambda u: policy.is_valid_url(u) if u is not None else False)
 
 
 def with_url_identity(

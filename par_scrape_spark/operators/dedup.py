@@ -364,18 +364,14 @@ class FilterStore:
 # ---------------------------------------------------------------- J2 dedup
 
 
-def dedup_new_urls(
-    candidates: DataFrame,
-    frontier_keys: DataFrame,
-    store: FilterStore | None = None,
-    filter_step: int | None = None,
-) -> DataFrame:
+def dedup_new_urls(candidates: DataFrame, frontier_keys: DataFrame) -> DataFrame:
     """J2: keep only candidates not already in the frontier (exact).
 
-    Bloom/cuckoo-negative candidates bypass the join (provably new);
-    positives take a left-anti join against the frontier keys on
-    ``(run, url_hash, url)``. Join on the hash first keeps the comparison
-    cheap; the url column rides along to make hash collisions harmless.
+    A left-anti join against the frontier keys on ``(run, url_hash,
+    url)``. Join on the hash first keeps the comparison cheap; the url
+    column rides along to make hash collisions harmless. The crawl
+    engine's bloom probe in front of this join lives in
+    ``plans/crawl.py``.
 
     The anti-join carries a SHUFFLE_HASH hint: sort-merge pays a full
     sort of the frontier keys on every call, while the shuffled hash
@@ -387,16 +383,6 @@ def dedup_new_urls(
     xxhash64, so AQE's advisory partition sizing caps each partition's
     share of the frontier regardless of total frontier size.
     """
-    if store is not None:
-        probed = store.probe_udf_cols(candidates, filter_step)
-        definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        survivors = maybe.join(
-            frontier_keys.hint("shuffle_hash"),
-            ["run", "url_hash", "url"],
-            "left_anti",
-        )
-        return definite_new.unionByName(survivors)
     return candidates.join(
         frontier_keys.hint("shuffle_hash"), ["run", "url_hash", "url"], "left_anti"
     )

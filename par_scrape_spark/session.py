@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory in whole GiB, at least 1g: a heap larger
+    than the box lets the local JVM grow until the kernel kills it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "par_scrape_spark",
     master: str | None = None,
@@ -19,7 +26,8 @@ def get_spark(
     Arrow transfer is on (every UDF in this engine is pandas/Arrow
     vectorized), shuffle partitions default to the core count rather
     than Spark's 200 (right-sized for local mode; a real cluster would
-    size this to ~2-3x total cores).
+    size this to ~2-3x total cores). The driver heap is half of physical
+    memory unless ``SPARK_GRAFT_DRIVER_MEM`` names one.
     """
     cores = os.cpu_count() or 8
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
@@ -28,12 +36,11 @@ def get_spark(
             shuffle_partitions = int(master[6:-1])
         else:
             shuffle_partitions = cores
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1") == "1"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true" if aqe else "false")
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -43,7 +50,10 @@ def get_spark(
         .config("spark.sql.broadcastTimeout", "3600")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -85,13 +85,12 @@ class SnapshotTable:
     def _commit_lock(self):
         """Writer mutex around read-LATEST → write-manifest → swap-LATEST.
 
-        Without it two concurrent writers (the streaming tier's
-        foreachBatch append + a batch engine commit on the same
-        warehouse) can both read LATEST=n and both write manifest-(n+1)
-        — the loser's data dir is written but falls out of the lineage
-        (lost update). ``flock`` serializes writers across processes
-        and threads on a local/NFS filesystem — this sandbox's world.
-        On an object store there is no flock; there the compare-and-swap
+        Without it two concurrent writers (two crawl runs committing to
+        one shared warehouse) can both read LATEST=n and both write
+        manifest-(n+1) — the loser's data dir is written but falls out
+        of the lineage (lost update). ``flock`` serializes writers
+        across processes and threads on a local/NFS filesystem. On an
+        object store there is no flock; there the compare-and-swap
         belongs to a catalog (Hive/Iceberg metastore, a DynamoDB-style
         lock), which is exactly the seam this method is — swap the
         body, keep the contract: at most one commit resolves against a
